@@ -1810,32 +1810,17 @@ object Lance {
       s"cannot restore $path to version $version: fragment files " +
         s"${missing.map(_.file).mkString(", ")} were vacuumed — " +
         "restore targets must be within the vacuum retention window")
-    val m = graft.format.Manifest(
-      version = latest.version + 1,
-      schemaJson = target.schemaJson,
-      fragments = target.fragments,
-      epochId = latest.epochId,
-      committedAtMs = System.currentTimeMillis(),
-      operation = Some("restore"),
-      droppedColumns = target.droppedColumns,
-      // restore returns to the TARGET's whole state, rules included —
-      // rules added after it were judged against data being undone
-      constraints = target.constraints,
-      // but replay guards are monotonic per query: keep the LATEST map, or
-      // a replayed epoch would re-land onto the restored state
-      streamEpochs = latest.streamEpochs,
-      // the mapping travels with the schema it names: restoring across a
-      // rename without it would read logical names against files that
-      // carry physical ones
-      columnMapping = target.columnMapping,
-      clusterBy = target.clusterBy,
-      bucketBy = target.bucketBy,
-      bloomFilters = target.bloomFilters,
-      // whole-state posture, like constraints: properties set after the
-      // target version describe data being undone
-      properties = target.properties,
-      fragmentGroups = target.fragmentGroups)
-    val committed = graft.format.LanceFormat.commit(fs, root, m)
+    // restore returns to the TARGET's whole state: rules and properties
+    // added after it were judged against data being undone, and the
+    // mapping travels with the schema it names. But replay guards are
+    // monotonic per query: keep the head's map (re-read on every commit
+    // attempt), or a replayed epoch would re-land onto the restored state
+    val committed = graft.format.LanceFormat.transact(fs,
+        graft.format.LanceFormat.versionsPath(root), Some("restore"),
+        prevHint = Some(Some(latest))) { prev =>
+      target.copy(epochId = prev.flatMap(_.epochId),
+        streamEpochs = prev.flatMap(_.streamEpochs), changeFiles = None)
+    }
     (version, committed.version)
   }
 
@@ -1873,8 +1858,6 @@ object Lance {
     }
     val dstRoot = new org.apache.hadoop.fs.Path(dstPath)
     val dstFs = graft.format.LanceFormat.fileSystem(dstRoot, conf)
-    require(graft.format.LanceFormat.readLatest(dstFs, dstRoot).isEmpty,
-      s"clone target already exists at $dstPath")
     // fully-qualified URIs: unambiguous on any store, and recognizably
     // external ([[graft.format.LanceFormat.isExternalRef]]) so deletion
     // paths skip them
@@ -1882,21 +1865,16 @@ object Lance {
       f.copy(file = srcFs.makeQualified(
         graft.format.LanceFormat.fragmentPath(srcRoot, f.file)).toString)
     }
-    dstFs.mkdirs(graft.format.LanceFormat.dataPath(dstRoot))
-    val committed = graft.format.LanceFormat.commit(dstFs, dstRoot,
-      graft.format.Manifest(
-        version = 1L,
-        schemaJson = src.schemaJson,
-        fragments = borrowed,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("clone"),
-        droppedColumns = src.droppedColumns,
-        constraints = src.constraints,
-        columnMapping = src.columnMapping,
-        clusterBy = src.clusterBy,
-        bucketBy = src.bucketBy,
-        bloomFilters = src.bloomFilters,
-        properties = src.properties))
+    val committed = graft.format.LanceFormat.transact(dstFs,
+        graft.format.LanceFormat.versionsPath(dstRoot), Some("clone")) { prev =>
+      // refused on every attempt: a clone that lost the publish must not
+      // land the borrowed fragment list over the winner's table
+      require(prev.isEmpty, s"clone target already exists at $dstPath")
+      dstFs.mkdirs(graft.format.LanceFormat.dataPath(dstRoot))
+      // a fresh table has no write history (epochs) and its own chunks
+      src.copy(fragments = borrowed, epochId = None, streamEpochs = None,
+        changeFiles = None, fragmentGroups = None)
+    }
     committed.version
   }
 

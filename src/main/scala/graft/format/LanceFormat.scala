@@ -210,13 +210,17 @@ case class Manifest(
   * `table/LanceCatalog.java:397,492-493`) — but stores fragments as
   * Parquet so the scan path is Spark's vectorized reader, no JNI.
   *
-  * Commit protocol: publish the serialized manifest at
-  * `_versions/<v>.manifest.json` via the store's atomic-if-absent
-  * primitive ([[ManifestPublisher]]: local hard link, HDFS rename,
-  * object-store conditional PUT); a losing concurrent committer retries
-  * on the next version number (optimistic MVCC). No external lock is
-  * needed on any store with one of those primitives — the reference's
-  * remote catalog instead throws (`table/LanceCatalog.java:508-514`).
+  * Commit protocol: every commit kind is one [[transact]] call. It
+  * reads the lineage head (re-read on every attempt; a caller's hint
+  * serves the first attempt only), hands it to the kind's body, and
+  * publishes the returned manifest at `_versions/<head+1>.manifest.json`
+  * via the store's atomic-if-absent primitive ([[ManifestPublisher]]:
+  * local hard link, HDFS rename, object-store conditional PUT). A
+  * committer that loses the publish re-runs its body against the new
+  * head, at most 20 attempts (optimistic MVCC); a body refuses a head it
+  * cannot commit over by throwing. No external lock is needed on any
+  * store with one of those primitives — the reference's remote catalog
+  * instead throws (`table/LanceCatalog.java:508-514`).
   */
 object LanceFormat {
   private implicit val fmts: org.json4s.Formats = Serialization.formats(NoTypeHints)
@@ -434,10 +438,6 @@ object LanceFormat {
     * The `exists` precheck is a cheap fast-path (one HEAD vs a doomed
     * PUT); correctness rests solely on the publisher's atomicity.
     */
-  private def commitOnce(fs: FileSystem, root: Path, m: Manifest,
-      publisher: Option[ManifestPublisher]): Boolean =
-    commitOnceIn(fs, versionsPath(root), m, publisher)
-
   private def commitOnceIn(fs: FileSystem, dir: Path, m: Manifest,
       publisher: Option[ManifestPublisher]): Boolean = {
     fs.mkdirs(dir)
@@ -581,29 +581,45 @@ object LanceFormat {
       case _ => ()
     }
 
-  /** Atomically commit `manifest` as the next version; retries the version
-    * number under optimistic concurrency. Content is committed as-is —
-    * correct for overwrite/create, whose outcome doesn't depend on the
-    * loser's state. Appends must remerge per attempt: use [[commitAppend]].
+  /** The one optimistic commit: read the head of lineage `dir`, let
+    * `body` derive the next manifest from it, stamp `version`,
+    * `committedAtMs` and `operation`, and publish. A lost publish re-reads
+    * the NEW head and re-runs `body` — retrying with the stale base would
+    * silently drop the winner's commit (lost update). `body` receives the
+    * head with its per-commit `changeFiles` cleared, so `prev.copy(...)`
+    * carries every declaration forward; it throws to refuse a head it
+    * cannot commit over. `prevHint` is a head the caller just read, used
+    * on the first attempt only: a stale hint loses the publish on the
+    * existing version file, and the retry reads fresh.
     */
-  def commit(fs: FileSystem, root: Path, manifest: Manifest,
-      publisher: Option[ManifestPublisher] = None): Manifest = {
+  private[graft] def transact(fs: FileSystem, dir: Path, operation: Option[String],
+      publisher: Option[ManifestPublisher] = None,
+      prevHint: Option[Option[Manifest]] = None)(
+      body: Option[Manifest] => Manifest): Manifest = {
     var attempt = 0
-    var m = manifest
     while (attempt < 20) {
-      if (commitOnce(fs, root, m, publisher)) return m
+      val prev =
+        if (attempt == 0 && prevHint.isDefined) prevHint.get
+        else readLatestIn(fs, dir)
+      val m = body(prev.map(_.copy(changeFiles = None))).copy(
+        version = prev.map(_.version).getOrElse(0L) + 1,
+        committedAtMs = System.currentTimeMillis(),
+        operation = operation)
+      if (commitOnceIn(fs, dir, m, publisher)) return m
       attempt += 1
-      m = m.copy(version = latestVersion(fs, root).getOrElse(0L) + 1)
     }
-    throw new IllegalStateException(
-      s"could not commit version after $attempt attempts at $root")
+    throw new IllegalStateException(s"could not commit " +
+      s"${operation.getOrElse("version")} after $attempt attempts into $dir")
   }
 
-  /** Append fragments as a new version (creates the dataset if absent).
-    * The read-merge-commit runs inside the retry loop: when a concurrent
-    * committer wins the rename race, the append re-reads the NEW latest
-    * manifest and re-merges — retrying with the stale base would silently
-    * drop the winner's fragments (lost update).
+  /** The carry-forward base of a first version: every optional field unset. */
+  private val FirstVersion = Manifest(0L, "", Seq.empty)
+
+  private def existing(prev: Option[Manifest], root: Path): Manifest =
+    prev.getOrElse(throw new IllegalStateException(s"no dataset at $root"))
+
+  /** Append fragments as a new version (creates the dataset if absent),
+    * merged onto the head of each commit attempt.
     */
   def commitAppend(fs: FileSystem, root: Path, schema: StructType,
       newFragments: Seq[FragmentMeta], epochId: Option[Long] = None,
@@ -631,17 +647,10 @@ object LanceFormat {
       failIfNewMatching: Option[(Set[String], Array[org.apache.spark.sql.sources.Filter])] = None,
       setProperties: Map[String, String] = Map.empty,
       requireProperties: Map[String, String] = Map.empty,
-      prevHint: Option[Option[Manifest]] = None): Manifest = {
-    var attempt = 0
-    while (attempt < 20) {
-      // prevHint: a head the CALLER just read (the write-scoped manifest
-      // reuse — factory/commit previously re-read the same head 2-3x per
-      // write). First attempt only; a conflict makes commitOnce fail on
-      // the existing version file and the retry re-reads fresh, so the
-      // CAS semantics are unchanged.
-      val prev =
-        if (attempt == 0 && prevHint.isDefined) prevHint.get
-        else readLatestIn(fs, dir)
+      prevHint: Option[Option[Manifest]] = None): Manifest =
+    // prevHint: the head this write's factory already read, so one write
+    // reads its head once
+    transact(fs, dir, Some("append"), publisher, prevHint) { prev =>
       checkRequiredProperties(prev, requireProperties, dir)
       failNewMatchingSinceSnapshot(prev, failIfNewMatching, Set.empty)
       val base = prev.map(_.fragments).getOrElse(Seq.empty)
@@ -654,30 +663,15 @@ object LanceFormat {
         mergeWidenedTypes(mergeLogicalNames(schema,
           prev.flatMap(_.columnMapping).getOrElse(Map.empty)), prev.map(_.schema)),
         prev.map(_.schema))
-      val m = Manifest(
-        version = prev.map(_.version).getOrElse(0L) + 1,
+      // the carried fragmentGroups is packForWrite's chunk-reuse hint: the
+      // untouched prefix keeps its content-addressed names
+      prev.getOrElse(FirstVersion).copy(
         schemaJson = mergeDeclaredNullability(named, rules).json,
         fragments = base ++ renumbered,
         epochId = epochId,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("append"),
-        droppedColumns = prev.flatMap(_.droppedColumns),
-        constraints = rules,
         streamEpochs = mergeStreamEpochs(prev.flatMap(_.streamEpochs), streamEpoch),
-        columnMapping = prev.flatMap(_.columnMapping),
-        clusterBy = prev.flatMap(_.clusterBy),
-        bucketBy = prev.flatMap(_.bucketBy),
-        bloomFilters = prev.flatMap(_.bloomFilters),
-        properties = mergeProperties(prev.flatMap(_.properties), setProperties),
-        // chunk-reuse hint for packForWrite: the untouched prefix keeps
-        // its content-addressed names without re-serializing
-        fragmentGroups = prev.flatMap(_.fragmentGroups))
-      if (commitOnceIn(fs, dir, m, publisher)) return m
-      attempt += 1
+        properties = mergeProperties(prev.flatMap(_.properties), setProperties))
     }
-    throw new IllegalStateException(
-      s"could not commit append after $attempt attempts into $dir")
-  }
 
   /** Metadata-only schema change (ALTER TABLE): commit `schema` (and the
     * updated dropped-name list) over the CURRENT fragment list.
@@ -693,28 +687,19 @@ object LanceFormat {
       droppedColumns: Seq[String],
       expectedSchemaJson: Option[String] = None,
       publisher: Option[ManifestPublisher] = None,
-      mappingTransform: Map[String, String] => Map[String, String] = identity): Manifest = {
-    var attempt = 0
-    while (attempt < 20) {
-      val prev = readLatest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no dataset at $root"))
+      mappingTransform: Map[String, String] => Map[String, String] = identity): Manifest =
+    transact(fs, versionsPath(root), Some("alter"), publisher) { p =>
+      val prev = existing(p, root)
       expectedSchemaJson.foreach { want =>
         if (prev.schemaJson != want) throw new java.util.ConcurrentModificationException(
           s"schema of $root changed concurrently during ALTER - re-run " +
             "against the current schema")
       }
-      val m = Manifest(
-        version = prev.version + 1,
+      prev.copy(
         schemaJson = mergeDeclaredNullability(
           mergeLogicalNames(schema, mappingTransform(prev.mapping)),
           prev.constraints).json,
-        fragments = prev.fragments,
-        epochId = prev.epochId,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("alter"),
         droppedColumns = Some(droppedColumns).filter(_.nonEmpty),
-        constraints = prev.constraints,
-        streamEpochs = prev.streamEpochs,
         columnMapping = Some(mappingTransform(prev.mapping)).filter(_.nonEmpty),
         // a DROPPED cluster column self-heals out of the spec
         clusterBy = prev.clusterBy
@@ -725,23 +710,15 @@ object LanceFormat {
           .filter(_.columns.forall(schema.fieldNames.contains)),
         // bloom columns are independent: a DROPPED one self-heals out
         bloomFilters = prev.bloomFilters
-          .map(_.filter(schema.fieldNames.contains)).filter(_.nonEmpty),
-        properties = prev.properties,
-        fragmentGroups = prev.fragmentGroups)
-      if (commitOnce(fs, root, m, publisher)) return m
-      attempt += 1
+          .map(_.filter(schema.fieldNames.contains)).filter(_.nonEmpty))
     }
-    throw new IllegalStateException(
-      s"could not commit alter after $attempt attempts at $root")
-  }
 
   /** Swap a set of fragment ids for new fragments in one commit — the
     * copy-on-write primitive under row-level DELETE/UPDATE/MERGE: untouched
     * fragments carry over by reference, old files stay for time travel.
     *
-    * Optimistic concurrency, same loop as [[commitAppend]]: a concurrent
-    * APPEND merges cleanly (its fragments ride along untouched). A
-    * concurrent commit that removed any of the fragments being replaced —
+    * A concurrent APPEND merges cleanly (its fragments ride along
+    * untouched). A concurrent commit that removed any of the fragments being replaced —
     * another row-level op, a compaction, an overwrite — makes this rewrite
     * stale (it was derived from files that are no longer the table), so it
     * fails loud with [[ConcurrentModificationException]] rather than
@@ -762,14 +739,10 @@ object LanceFormat {
     changeFiles.foreach(c => require(ChangeFileMeta.Kinds.contains(c.kind),
       s"unknown change-file kind '${c.kind}'"))
     require(removedIds.nonEmpty, "commitReplace needs at least one fragment to remove")
-    var attempt = 0
-    while (attempt < 20) {
-      // prevHint: caller-just-read head, first attempt only (see
-      // commitAppendIn) — a stale hint loses the commitOnce race and the
-      // retry re-reads fresh, so CAS semantics are unchanged
-      val prev = (if (attempt == 0) prevHint else None).getOrElse(
-        readLatest(fs, root).getOrElse(
-          throw new IllegalStateException(s"no dataset at $root")))
+    var removedRows = 0L
+    val m = transact(fs, versionsPath(root), Some(operation), publisher,
+        prevHint.map(Some(_))) { p =>
+      val prev = existing(p, root)
       checkRequiredProperties(Some(prev), requireProperties, root)
       failNewMatchingSinceSnapshot(Some(prev), failIfNewMatching,
         newFragments.map(_.file).toSet)
@@ -782,38 +755,24 @@ object LanceFormat {
             s"concurrent commit at $root; re-run the row-level operation " +
             "against the current version")
       val kept = base.filterNot(f => removedIds.contains(f.id))
-      val removedRows = base.filter(f => removedIds.contains(f.id)).map(_.rowCount).sum
+      removedRows = base.filter(f => removedIds.contains(f.id)).map(_.rowCount).sum
       val nextId = base.map(_.id).maxOption.getOrElse(-1) + 1
       val renumbered = reconcileBucketTags(
         newFragments.zipWithIndex.map { case (f, i) => f.copy(id = nextId + i) },
         routedBucketSpec, Some(prev))
-      val m = Manifest(
-        version = prev.version + 1,
+      // a partially-rewritten table keeps droppedColumns: untouched
+      // fragments may still hold dropped columns' data
+      prev.copy(
         schemaJson = mergeDeclaredNullability(
           mergeColumnDefaults(
             mergeWidenedTypes(mergeLogicalNames(schema, prev.mapping),
               Some(prev.schema)), Some(prev.schema)), prev.constraints).json,
         fragments = kept ++ renumbered,
         epochId = epochId.orElse(prev.epochId),
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some(operation),
-        // partially-rewritten table: untouched fragments may still hold
-        // dropped columns' data, the resurrection guard must survive
-        droppedColumns = prev.droppedColumns,
-        constraints = prev.constraints,
-        streamEpochs = prev.streamEpochs,
-        columnMapping = prev.columnMapping,
-        clusterBy = prev.clusterBy,
-        bucketBy = prev.bucketBy,
-        bloomFilters = prev.bloomFilters,
         changeFiles = Some(changeFiles).filter(_.nonEmpty),
-        properties = mergeProperties(prev.properties, setProperties),
-        fragmentGroups = prev.fragmentGroups)
-      if (commitOnce(fs, root, m, publisher)) return (m, removedRows)
-      attempt += 1
+        properties = mergeProperties(prev.properties, setProperties))
     }
-    throw new IllegalStateException(
-      s"could not commit replace after $attempt attempts at $root")
+    (m, removedRows)
   }
 
   /** Replace all fragments (overwrite semantics). Old files are kept for
@@ -829,19 +788,8 @@ object LanceFormat {
       routedBucketSpec: Option[Option[(Seq[Int], Seq[String])]] = None,
       setProperties: Map[String, String] = Map.empty,
       requireProperties: Map[String, String] = Map.empty,
-      prevHint: Option[Option[Manifest]] = None): Manifest = {
-    // prev is re-read INSIDE the retry loop: a concurrent add/drop
-    // constraint (or another metadata commit) landing between a single
-    // upfront read and the publish would have its rule set silently
-    // REPLACED by the stale copy — the same lost-update shape
-    // commitAppendIn re-merges against. prevHint (a head the caller just
-    // read) serves the FIRST attempt only; a stale hint loses the
-    // commitOnce race and the retry re-reads fresh.
-    var attempt = 0
-    while (attempt < 20) {
-      val prev =
-        if (attempt == 0 && prevHint.isDefined) prevHint.get
-        else readLatest(fs, root)
+      prevHint: Option[Option[Manifest]] = None): Manifest =
+    transact(fs, versionsPath(root), Some(operation), None, prevHint) { prev =>
       // the CAS watermark guard holds for overwrite-shaped commits too
       // (a full MV/replica rebuild is an overwrite); re-checked per retry
       checkRequiredProperties(prev, requireProperties, root)
@@ -855,8 +803,13 @@ object LanceFormat {
           prev.flatMap(_.columnMapping).getOrElse(Map.empty)),
           prev.map(_.schema)),
         prev.map(_.schema))
-      val m = Manifest(
-        version = prev.map(_.version).getOrElse(0L) + 1,
+      // carried: table-level rules (Delta semantics), replay guards (an
+      // old epoch must not re-land after an overwrite wiped the data it
+      // once wrote) and the column mapping (the new fragments were
+      // written through the same logical->physical translation). Reset:
+      // the dropped-name guard (a fresh physical state has nothing to
+      // resurrect) and the chunk-reuse hint (no chunk survives).
+      prev.getOrElse(FirstVersion).copy(
         // a declared NOT NULL survives the overwrite like its rule does
         // (the rule was enforced against the new batch pre-commit, so the
         // non-nullable flag stays TRUE of the data) — only inference-only
@@ -866,16 +819,8 @@ object LanceFormat {
           newFragments.zipWithIndex.map { case (f, i) => f.copy(id = i) },
           routedBucketSpec, prev),
         epochId = epochId,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some(operation),
-        // table-level rules survive data replacement (Delta semantics)
-        constraints = rules,
-        // replay guards survive too: an old epoch must not re-land after
-        // an overwrite wiped the data it once wrote
+        droppedColumns = None,
         streamEpochs = mergeStreamEpochs(prev.flatMap(_.streamEpochs), streamEpoch),
-        // the overwrite's fragments were written through the same
-        // logical->physical translation, so the mapping stays true
-        columnMapping = prev.flatMap(_.columnMapping),
         // an overwrite that changed the schema self-heals vanished
         // cluster columns out of the spec (commitAlter's posture)
         clusterBy = prev.flatMap(_.clusterBy)
@@ -884,13 +829,9 @@ object LanceFormat {
           .filter(_.columns.forall(named.fieldNames.contains)),
         bloomFilters = prev.flatMap(_.bloomFilters)
           .map(_.filter(named.fieldNames.contains)).filter(_.nonEmpty),
-        properties = mergeProperties(prev.flatMap(_.properties), setProperties))
-      if (commitOnce(fs, root, m, None)) return m
-      attempt += 1
+        properties = mergeProperties(prev.flatMap(_.properties), setProperties),
+        fragmentGroups = None)
     }
-    throw new IllegalStateException(
-      s"could not commit overwrite after $attempt attempts at $root")
-  }
 
   /** Rename `s`'s top-level fields per `mapping` (logical → physical).
     * Positions, types, nullability and metadata are untouched, so rows
@@ -922,10 +863,8 @@ object LanceFormat {
       s"invalid column name '$newName'")
     requireNoIndexSidecar(fs, root, oldName, "rename",
       "drop the index and rebuild it under the new name")
-    var attempt = 0
-    while (attempt < 20) {
-      val prev = readLatest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no dataset at $root"))
+    transact(fs, versionsPath(root), Some("alter")) { p =>
+      val prev = existing(p, root)
       require(prev.schema.fieldNames.contains(oldName),
         s"no column '$oldName' at $root")
       require(!prev.schema.fieldNames.contains(newName),
@@ -953,13 +892,9 @@ object LanceFormat {
       val physical = prev.physicalName(oldName)
       val newMapping = (prev.mapping - oldName) ++
         (if (physical == newName) Map.empty else Map(newName -> physical))
-      val m = prev.copy(
-        version = prev.version + 1,
+      prev.copy(
         schemaJson = StructType(prev.schema.fields.map(f =>
           if (f.name == oldName) f.copy(name = newName) else f)).json,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("alter"),
-        changeFiles = None,
         constraints = Some(newRules).filter(_.nonEmpty),
         columnMapping = Some(newMapping).filter(_.nonEmpty),
         // the clustering/bucketing specs name LOGICAL columns: they remap
@@ -979,11 +914,7 @@ object LanceFormat {
               .mkString(",")
           case kv => kv
         }))
-      if (commitOnceIn(fs, versionsPath(root), m, None)) return m
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"could not commit rename after $attempt attempts at $root")
   }
 
   /** Index sidecars are column-addressed (dir `<col>_<kind>` + metas that
@@ -1133,10 +1064,8 @@ object LanceFormat {
       newType: DataType): Manifest = {
     requireNoIndexSidecar(fs, root, column, "widen",
       "drop the index and rebuild it after the type change")
-    var attempt = 0
-    while (attempt < 20) {
-      val prev = readLatest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no dataset at $root"))
+    transact(fs, versionsPath(root), Some("alter")) { p =>
+      val prev = existing(p, root)
       val field = prev.schema.fields.find(_.name == column).getOrElse(
         throw new IllegalArgumentException(s"no column '$column' at $root"))
       require(widensTo(field.dataType, newType),
@@ -1151,18 +1080,9 @@ object LanceFormat {
         s"cannot widen '$column': it is a declared bucket column - clear " +
           "the bucket spec (clusterByBucket with no columns) and re-bucket " +
           "under the new type")
-      val m = prev.copy(
-        version = prev.version + 1,
-        schemaJson = StructType(prev.schema.fields.map(f =>
-          if (f.name == column) f.copy(dataType = newType) else f)).json,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("alter"),
-        changeFiles = None)
-      if (commitOnceIn(fs, versionsPath(root), m, None)) return m
-      attempt += 1
+      prev.copy(schemaJson = StructType(prev.schema.fields.map(f =>
+        if (f.name == column) f.copy(dataType = newType) else f)).json)
     }
-    throw new IllegalStateException(
-      s"could not commit widen after $attempt attempts at $root")
   }
 
   /** Record (or clear, with an empty list) the declared clustering spec
@@ -1170,28 +1090,16 @@ object LanceFormat {
     * rewrite so every later maintenance rewrite re-establishes the same
     * order; carried forward by every commit kind like constraints are.
     */
-  def commitClusterBy(fs: FileSystem, root: Path, cols: Seq[String]): Manifest = {
-    var attempt = 0
-    while (attempt < 20) {
-      val prev = readLatest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no dataset at $root"))
+  def commitClusterBy(fs: FileSystem, root: Path, cols: Seq[String]): Manifest =
+    transact(fs, versionsPath(root), Some("alter")) { p =>
+      val prev = existing(p, root)
       cols.foreach(c => require(prev.schema.fieldNames.contains(c),
         s"no column '$c' at $root"))
       require(cols.isEmpty || prev.bucketBy.isEmpty,
         s"table at $root is hash-bucketed (${prev.bucketBy.get.columns.mkString(",")})" +
           " - the two layouts are mutually exclusive; clear the bucket spec first")
-      val m = prev.copy(
-        version = prev.version + 1,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("alter"),
-        changeFiles = None,
-        clusterBy = Some(cols).filter(_.nonEmpty))
-      if (commitOnceIn(fs, versionsPath(root), m, None)) return m
-      attempt += 1
+      prev.copy(clusterBy = Some(cols).filter(_.nonEmpty))
     }
-    throw new IllegalStateException(
-      s"could not commit cluster spec after $attempt attempts at $root")
-  }
 
   /** Declare (or clear, with an empty column list) the hash-bucket layout
     * — one metadata commit; [[graft.Lance.clusterByBucket]] follows it
@@ -1213,10 +1121,8 @@ object LanceFormat {
       s"bucket grid too wide: ${wv.mkString("*")} = " +
         s"${BucketHash.totalTags(wv)} tags (max ${1 << 20}) - " +
         "composite specs bucket PER COLUMN; use smaller widths")
-    var attempt = 0
-    while (attempt < 20) {
-      val prev = readLatest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no dataset at $root"))
+    transact(fs, versionsPath(root), Some("alter")) { p =>
+      val prev = existing(p, root)
       cols.foreach { c =>
         val f = prev.schema.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(s"no column '$c' at $root"))
@@ -1255,18 +1161,8 @@ object LanceFormat {
           if (f.bucket.isDefined || f.sorted.isDefined)
             f.copy(bucket = None, sorted = None)
           else f)
-      val m = prev.copy(
-        version = prev.version + 1,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("alter"),
-        changeFiles = None,
-        fragments = fragments,
-        bucketBy = newSpec)
-      if (commitOnceIn(fs, versionsPath(root), m, None)) return m
-      attempt += 1
+      prev.copy(fragments = fragments, bucketBy = newSpec)
     }
-    throw new IllegalStateException(
-      s"could not commit bucket spec after $attempt attempts at $root")
   }
 
   /** Declare (or clear, with an empty list) the columns every fragment
@@ -1276,11 +1172,9 @@ object LanceFormat {
     * the Delta/Iceberg posture (declaration ≠ rewrite).
     */
   def commitBloomFilters(fs: FileSystem, root: Path,
-      cols: Seq[String]): Manifest = {
-    var attempt = 0
-    while (attempt < 20) {
-      val prev = readLatest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no dataset at $root"))
+      cols: Seq[String]): Manifest =
+    transact(fs, versionsPath(root), Some("alter")) { p =>
+      val prev = existing(p, root)
       cols.foreach { c =>
         val f = prev.schema.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(s"no column '$c' at $root"))
@@ -1289,18 +1183,8 @@ object LanceFormat {
             "filter: supported types are integral, string, binary, " +
             "float/double, date, timestamp")
       }
-      val m = prev.copy(
-        version = prev.version + 1,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("alter"),
-        changeFiles = None,
-        bloomFilters = Some(cols.distinct).filter(_.nonEmpty))
-      if (commitOnceIn(fs, versionsPath(root), m, None)) return m
-      attempt += 1
+      prev.copy(bloomFilters = Some(cols.distinct).filter(_.nonEmpty))
     }
-    throw new IllegalStateException(
-      s"could not commit bloom-filter spec after $attempt attempts at $root")
-  }
 
   /** Types parquet can bloom-filter (INT32/INT64/FLOAT/DOUBLE/BINARY
     * physical representations; BOOLEAN and nested types cannot). */
@@ -1379,12 +1263,14 @@ object LanceFormat {
   /** Create an empty dataset with just a schema (lazy materialization,
     * reference `LanceCatalog.java:557-579`).
     */
-  def create(fs: FileSystem, root: Path, schema: StructType): Manifest = {
-    require(readLatest(fs, root).isEmpty, s"dataset already exists at $root")
-    fs.mkdirs(dataPath(root))
-    commit(fs, root, Manifest(1L, schema.json, Seq.empty,
-      committedAtMs = System.currentTimeMillis()))
-  }
+  def create(fs: FileSystem, root: Path, schema: StructType): Manifest =
+    transact(fs, versionsPath(root), None) { prev =>
+      // refused on every attempt: a create that lost the publish must not
+      // land its empty schema over the winner's table
+      require(prev.isEmpty, s"dataset already exists at $root")
+      fs.mkdirs(dataPath(root))
+      FirstVersion.copy(schemaJson = schema.json)
+    }
 
   /** Is `file` an EXTERNAL fragment reference — an absolute path or full
     * URI into ANOTHER dataset's data directory? Zero-copy clones
@@ -1684,24 +1570,12 @@ object LanceFormat {
     * one — the [[commitConstraints]] posture. */
   def commitPropertiesWith(fs: FileSystem, root: Path,
       mutate: Map[String, String] => Map[String, String],
-      publisher: Option[ManifestPublisher] = None): Manifest = {
-    var attempt = 0
-    while (attempt < 20) {
-      val prev = readLatest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no dataset at $root"))
-      val m = prev.copy(
-        version = prev.version + 1,
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("alter"),
-        changeFiles = None,
-        properties = Some(mutate(prev.properties.getOrElse(Map.empty)))
-          .filter(_.nonEmpty))
-      if (commitOnce(fs, root, m, publisher)) return m
-      attempt += 1
+      publisher: Option[ManifestPublisher] = None): Manifest =
+    transact(fs, versionsPath(root), Some("alter"), publisher) { p =>
+      val prev = existing(p, root)
+      prev.copy(properties = Some(mutate(prev.properties.getOrElse(Map.empty)))
+        .filter(_.nonEmpty))
     }
-    throw new IllegalStateException(
-      s"could not commit properties after $attempt attempts at $root")
-  }
 
   /** Metadata-only constraints change: `mutate` transforms the CURRENT
     * rule set inside the retry loop — re-deriving per attempt is what
@@ -1715,24 +1589,13 @@ object LanceFormat {
   def commitConstraints(fs: FileSystem, root: Path,
       mutate: Map[String, String] => Map[String, String],
       publisher: Option[ManifestPublisher] = None,
-      schemaTransform: Option[StructType => StructType] = None): Manifest = {
-    var attempt = 0
-    while (attempt < 20) {
-      val prev = readLatest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no dataset at $root"))
-      val m = prev.copy(
-        version = prev.version + 1,
+      schemaTransform: Option[StructType => StructType] = None): Manifest =
+    transact(fs, versionsPath(root), Some("alter"), publisher) { p =>
+      val prev = existing(p, root)
+      prev.copy(
         schemaJson = schemaTransform.fold(prev.schemaJson)(t => t(prev.schema).json),
-        committedAtMs = System.currentTimeMillis(),
-        operation = Some("alter"),
-        changeFiles = None,
         constraints = Some(mutate(prev.checkConstraints)).filter(_.nonEmpty))
-      if (commitOnce(fs, root, m, publisher)) return m
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"could not commit constraints after $attempt attempts at $root")
-  }
 
   // -------------------------------------------------------------- branches
 
@@ -1829,36 +1692,31 @@ object LanceFormat {
         s"branch forked at v$base — divergent histories need a merge, " +
         "which this format does not support")
     val head = readManifestIn(fs, bp, vs.last)
-    val m = Manifest(
-      version = mainLatest.version + 1,
-      schemaJson = head.schemaJson,
-      fragments = head.fragments,
-      epochId = head.epochId,
-      committedAtMs = System.currentTimeMillis(),
-      operation = Some("fast-forward"),
-      droppedColumns = head.droppedColumns,
-      constraints = head.constraints,
-      // replay guards are MAIN-lineage state: keep main's, not the fork-time copy
-      streamEpochs = mainLatest.streamEpochs,
-      // the mapping travels with the schema it names (head's)
-      columnMapping = head.columnMapping,
-      clusterBy = head.clusterBy,
-      bucketBy = head.bucketBy,
-      bloomFilters = head.bloomFilters,
-      properties = head.properties,
-      fragmentGroups = head.fragmentGroups)
-    // ONE commitOnce attempt, never the version-bumping commit() retry: a
-    // concurrent main append winning the race means the precondition no
-    // longer holds, and retrying at the next number would publish the
-    // branch's fragment list OVER the append — a silent lost update.
-    // Losing the race fails loud instead; the caller re-runs and hits the
-    // divergence message above.
-    if (!commitOnce(fs, root, m, None))
-      throw new java.util.ConcurrentModificationException(
-        s"cannot fast-forward '$name': main advanced concurrently past " +
-          s"v${mainLatest.version} — histories are now divergent")
+    val m = commitOver(fs, root, "fast-forward", mainLatest,
+      s"cannot fast-forward '$name': main advanced concurrently past " +
+        s"v${mainLatest.version} — histories are now divergent") { prev =>
+      // the branch head's whole state (the mapping travels with the schema
+      // it names), but replay guards are MAIN-lineage state: keep main's,
+      // not the fork-time copy
+      head.copy(streamEpochs = prev.streamEpochs, changeFiles = None)
+    }
     (vs.last, m.version)
   }
+
+  /** Commit over exactly `proven`, the main head a branch adoption ran its
+    * proofs against. Losing the publish refuses with `conflict` instead of
+    * retrying: main moved, the proofs no longer hold, and landing at the
+    * next number would publish the adoption OVER the concurrent commit —
+    * a silent lost update. The caller re-runs against the new state. */
+  private def commitOver(fs: FileSystem, root: Path, operation: String,
+      proven: Manifest, conflict: => String)(body: Manifest => Manifest): Manifest =
+    transact(fs, versionsPath(root), Some(operation),
+        prevHint = Some(Some(proven))) { p =>
+      val prev = existing(p, root)
+      if (prev.version != proven.version)
+        throw new java.util.ConcurrentModificationException(conflict)
+      body(prev)
+    }
 
   /** Rebase an APPEND-ONLY branch onto main's CURRENT head — the merge
     * case [[fastForward]] refuses: main advanced past the branch point.
@@ -1879,8 +1737,7 @@ object LanceFormat {
     *  - `validate` runs over the branch-only fragments BEFORE the commit
     *    (the facade proves MAIN's current CHECK constraints there, which
     *    may be stricter than the fork-time rules the branch enforced);
-    *  - ONE `commitOnce` attempt at exactly mainHead+1, never a
-    *    version-bump retry (the fastForward race lesson): if main moved
+    *  - a commit at exactly mainHead+1 ([[commitOver]]): if main moved
     *    after the proofs — including a concurrent add_constraint, which
     *    commits a version — the rebase fails loud with
     *    [[java.util.ConcurrentModificationException]] and the caller
@@ -1968,28 +1825,13 @@ object LanceFormat {
       val g = f.copy(id = nextId + i)
       if (sameSpec) g else g.copy(bucket = None, sorted = None)
     }
-    val m = Manifest(
-      version = mainLatest.version + 1,
-      schemaJson = merged.json,
-      fragments = mainLatest.fragments ++ renumbered,
-      epochId = mainLatest.epochId,
-      committedAtMs = System.currentTimeMillis(),
-      // adds-only: changefeed readers emit the adopted fragments as
-      // inserts, exactly like an append (no fragment is ever dropped)
-      operation = Some("rebase"),
-      droppedColumns = mainLatest.droppedColumns,
-      constraints = mainLatest.constraints,
-      streamEpochs = mainLatest.streamEpochs,
-      columnMapping = mainLatest.columnMapping,
-      clusterBy = mainLatest.clusterBy,
-      bucketBy = mainLatest.bucketBy,
-      bloomFilters = mainLatest.bloomFilters,
-      properties = mainLatest.properties,
-      fragmentGroups = mainLatest.fragmentGroups)
-    if (!commitOnce(fs, root, m, None))
-      throw new java.util.ConcurrentModificationException(
-        s"cannot rebase '$name': main advanced concurrently past " +
-          s"v${mainLatest.version} - re-run against the new state")
+    // "rebase" is adds-only: changefeed readers emit the adopted
+    // fragments as inserts, exactly like an append
+    val m = commitOver(fs, root, "rebase", mainLatest,
+      s"cannot rebase '$name': main advanced concurrently past " +
+        s"v${mainLatest.version} - re-run against the new state") { prev =>
+      prev.copy(schemaJson = merged.json, fragments = prev.fragments ++ renumbered)
+    }
     (vs.last, m.version)
   }
 
@@ -2061,28 +1903,13 @@ object LanceFormat {
       val g = f.copy(id = nextId + i)
       if (sameSpec) g else g.copy(bucket = None, sorted = None)
     }
-    val m = Manifest(
-      version = mainLatest.version + 1,
-      schemaJson = merged.json,
-      fragments = mainLatest.fragments ++ renumbered,
-      epochId = mainLatest.epochId,
-      committedAtMs = System.currentTimeMillis(),
-      // adds-only: changefeed readers see the picked fragments as
-      // inserts, exactly like an append
-      operation = Some("cherry-pick"),
-      droppedColumns = mainLatest.droppedColumns,
-      constraints = mainLatest.constraints,
-      streamEpochs = mainLatest.streamEpochs,
-      columnMapping = mainLatest.columnMapping,
-      clusterBy = mainLatest.clusterBy,
-      bucketBy = mainLatest.bucketBy,
-      bloomFilters = mainLatest.bloomFilters,
-      properties = mainLatest.properties,
-      fragmentGroups = mainLatest.fragmentGroups)
-    if (!commitOnce(fs, root, m, None))
-      throw new java.util.ConcurrentModificationException(
-        s"cannot cherry-pick '$name' v$version: main advanced concurrently " +
-          s"past v${mainLatest.version} - re-run against the new state")
+    // "cherry-pick" is adds-only: changefeed readers see the picked
+    // fragments as inserts, exactly like an append
+    val m = commitOver(fs, root, "cherry-pick", mainLatest,
+      s"cannot cherry-pick '$name' v$version: main advanced concurrently " +
+        s"past v${mainLatest.version} - re-run against the new state") { prev =>
+      prev.copy(schemaJson = merged.json, fragments = prev.fragments ++ renumbered)
+    }
     (renumbered.size, m.version)
   }
 

@@ -1,9 +1,10 @@
 package graft
 
-import graft.format.{FragmentMeta, LanceFormat, ManifestPublisher}
+import graft.format.{FragmentMeta, LanceFormat, Manifest, ManifestPublisher}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -16,21 +17,32 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
   * publisher (via [[CondPutMemoryFileSystem]], whose create-if-absent
   * fails at close exactly like a real S3 `If-None-Match` PUT).
   */
-class CommitRaceSpec extends AnyFunSuite {
+class CommitRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val schema = new StructType().add("id", LongType).add("v", StringType)
+
+  /** Every directory a test created, deleted after the suite. */
+  private val created = scala.collection.mutable.ArrayBuffer.empty[(FileSystem, Path)]
+
+  override def afterAll(): Unit =
+    try created.synchronized(created.foreach { case (fs, p) => fs.delete(p, true) })
+    finally super.afterAll()
 
   private def localRoot(): (FileSystem, Path) = {
     val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "race-")
     val root = new Path(s"${dir.toAbsolutePath}/tbl")
-    (LanceFormat.fileSystem(root, new Configuration()), root)
+    val fs = LanceFormat.fileSystem(root, new Configuration())
+    created.synchronized(created += ((fs, root.getParent)))
+    (fs, root)
   }
 
   private def memRoot(): (FileSystem, Path) = {
     val conf = new Configuration()
     conf.set("fs.condmem.impl", classOf[CondPutMemoryFileSystem].getName)
     val root = new Path(s"condmem://bucket/tbl-${UUID.randomUUID()}")
-    (root.getFileSystem(conf), root)
+    val fs = root.getFileSystem(conf)
+    created.synchronized(created += ((fs, root)))
+    (fs, root)
   }
 
   /** Deterministic interleaver: the thread named `pausedThread` parks
@@ -40,10 +52,146 @@ class CommitRaceSpec extends AnyFunSuite {
     */
   private class GatedPublisher(inner: ManifestPublisher, gate: CountDownLatch,
       pausedThread: String) extends ManifestPublisher {
+    /** Opens once the paused thread has reached its first publish. */
+    val arrived = new CountDownLatch(1)
     override def publish(fs: FileSystem, target: Path, bytes: Array[Byte]): Boolean = {
-      if (Thread.currentThread().getName == pausedThread)
+      if (Thread.currentThread().getName == pausedThread) {
+        arrived.countDown()
         assert(gate.await(30, TimeUnit.SECONDS), "winner never landed")
+      }
       inner.publish(fs, target, bytes)
+    }
+  }
+
+  /** Forces the lost-update window on the `condmem` store through the
+    * registry seam (no commit function takes a publisher for this): runs
+    * `loser` on its own thread until it parks right before its first
+    * publish, lands `winner` on the calling thread, then lets the loser
+    * publish into the lost race. Returns what the loser threw, if anything.
+    */
+  private def parkedRace(loser: => Unit)(winner: => Unit): Option[Throwable] = {
+    val gate = new CountDownLatch(1)
+    val pub = new GatedPublisher(ManifestPublisher.ConditionalPut, gate, "parked-loser")
+    ManifestPublisher.register("condmem", pub)
+    var thrown: Option[Throwable] = None
+    try {
+      val t = new Thread(() =>
+        try loser catch { case e: Throwable => thrown = Some(e) }, "parked-loser")
+      t.start()
+      while (!pub.arrived.await(10, TimeUnit.MILLISECONDS) && t.isAlive) ()
+      assert(pub.arrived.getCount == 0,
+        s"the loser ended before its publish: ${thrown.map(_.toString)}")
+      winner
+      gate.countDown()
+      t.join(30000)
+      assert(!t.isAlive, "the loser never finished")
+    } finally {
+      gate.countDown()
+      ManifestPublisher.unregister("condmem")
+    }
+    thrown
+  }
+
+  /** Set-up commits on `condmem`, outside any registered override. */
+  private val condPut = Some(ManifestPublisher.ConditionalPut: ManifestPublisher)
+
+  /** Hadoop conf of the shared session, able to resolve `condmem://`. */
+  private def sparkWithCondmem(): org.apache.spark.sql.SparkSession = {
+    val spark = TestSpark.spark
+    spark.sparkContext.hadoopConfiguration.set("fs.condmem.impl",
+      classOf[CondPutMemoryFileSystem].getName)
+    spark
+  }
+
+  test("a create that loses the publish race refuses; the winner's head stands") {
+    val (fs, root) = memRoot()
+    val thrown = parkedRace(LanceFormat.create(fs, root, schema)) {
+      LanceFormat.commitAppend(fs, root, schema, Seq(FragmentMeta(0, "w.parquet", 5)))
+    }
+    assert(thrown.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+      e.getMessage.contains("already exists")), s"loser threw $thrown")
+    assert(LanceFormat.listVersions(fs, root) == Seq(1L),
+      "the losing create must not publish its empty schema over the winner")
+    assert(LanceFormat.readLatest(fs, root).get.fragments.map(_.file) == Seq("w.parquet"))
+  }
+
+  test("a clone that loses the publish race refuses; the winner's head stands") {
+    val spark = sparkWithCondmem()
+    val (fs, src) = memRoot()
+    LanceFormat.commitAppend(fs, src, schema, Seq(FragmentMeta(0, "src.parquet", 3)),
+      publisher = condPut)
+    val (_, dst) = memRoot()
+    val thrown = parkedRace(Lance.cloneTable(spark, src.toString, dst.toString)) {
+      LanceFormat.commitAppend(fs, dst, schema, Seq(FragmentMeta(0, "w.parquet", 5)))
+    }
+    assert(thrown.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+      e.getMessage.contains("already exists")), s"loser threw $thrown")
+    assert(LanceFormat.listVersions(fs, dst) == Seq(1L),
+      "the losing clone must not publish borrowed fragments over the winner")
+    val head = LanceFormat.readLatest(fs, dst).get
+    assert(head.fragments.map(_.file) == Seq("w.parquet") &&
+      head.operation.contains("append"))
+  }
+
+  test("restore keeps a replay guard committed while it was parked") {
+    val spark = sparkWithCondmem()
+    val (fs, root) = memRoot()
+    fs.create(new Path(root, "data/a.parquet")).close()
+    LanceFormat.commitAppend(fs, root, schema, Seq(FragmentMeta(0, "a.parquet", 2)),
+      publisher = condPut)
+    LanceFormat.commitAppend(fs, root, schema, Seq(FragmentMeta(0, "b.parquet", 2)),
+      publisher = condPut)
+    val thrown = parkedRace(Lance.restore(spark, root.toString, 1L)) {
+      // a streaming epoch lands between restore's head read and its publish
+      LanceFormat.commitAppend(fs, root, schema, Seq(FragmentMeta(0, "c.parquet", 2)),
+        streamEpoch = Some(("q", 7L)))
+    }
+    assert(thrown.isEmpty, s"restore threw $thrown")
+    assert(LanceFormat.listVersions(fs, root) == (1L to 4L))
+    val head = LanceFormat.readLatest(fs, root).get
+    assert(head.operation.contains("restore") &&
+      head.fragments.map(_.file) == Seq("a.parquet"))
+    assert(head.streamEpochFor("q").contains(7L),
+      "the restored head must carry the guard of the epoch that landed " +
+        "inside the window, or a replay of it would land its rows again")
+  }
+
+  test("every metadata commit kind re-derives over a concurrent property commit") {
+    val wide = schema.add("n", IntegerType)
+    // (kind, commit, effect the landed manifest must show)
+    val kinds: Seq[(String, (FileSystem, Path) => Unit, Manifest => Boolean)] = Seq(
+      ("alter", (fs, root) => LanceFormat.commitAlter(fs, root,
+        wide.add("extra", StringType), Seq.empty),
+        m => m.schema.fieldNames.contains("extra")),
+      ("rename", (fs, root) => LanceFormat.commitRename(fs, root, "v", "w"),
+        m => m.schema.fieldNames.contains("w") && m.physicalName("w") == "v"),
+      ("widen", (fs, root) => LanceFormat.commitWiden(fs, root, "n", LongType),
+        m => m.schema("n").dataType == LongType),
+      ("clusterBy", (fs, root) => LanceFormat.commitClusterBy(fs, root, Seq("id")),
+        m => m.clusterBy.contains(Seq("id"))),
+      ("bucketBy", (fs, root) => LanceFormat.commitBucketBy(fs, root, 4, Seq("id")),
+        m => m.bucketBy.exists(_.columns == Seq("id"))),
+      ("bloomFilters", (fs, root) => LanceFormat.commitBloomFilters(fs, root, Seq("v")),
+        m => m.bloomFilters.contains(Seq("v"))),
+      ("properties", (fs, root) => LanceFormat.commitProperties(fs, root, Map("mine" -> "1")),
+        m => m.properties.exists(_.get("mine").contains("1"))),
+      ("constraints", (fs, root) =>
+        LanceFormat.commitConstraints(fs, root, _ + ("pos" -> "id >= 0")),
+        m => m.checkConstraints.get("pos").contains("id >= 0")))
+    for ((kind, commit, effect) <- kinds) {
+      val (fs, root) = memRoot()
+      LanceFormat.commitAppend(fs, root, wide, Seq(FragmentMeta(0, "base.parquet", 10)),
+        publisher = condPut)
+      val thrown = parkedRace(commit(fs, root)) {
+        LanceFormat.commitProperties(fs, root, Map("concurrent" -> "yes"))
+      }
+      assert(thrown.isEmpty, s"$kind threw $thrown")
+      assert(LanceFormat.listVersions(fs, root) == (1L to 3L),
+        s"$kind must land at the version after the concurrent commit")
+      val head = LanceFormat.readLatest(fs, root).get
+      assert(head.operation.contains("alter") && effect(head), s"$kind: $head")
+      assert(head.properties.exists(_.get("concurrent").contains("yes")),
+        s"$kind dropped the concurrent property: ${head.properties}")
     }
   }
 

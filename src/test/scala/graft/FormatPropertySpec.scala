@@ -1,6 +1,6 @@
 package graft
 
-import graft.format.{FragmentMeta, LanceFormat, Manifest}
+import graft.format.{BucketSpecMeta, ChangeFileMeta, FragmentMeta, LanceFormat, Manifest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -296,5 +296,161 @@ class FormatPropertySpec extends AnyFunSuite {
     // the round-6 droppedColumns field defaults too (resurrection guard
     // simply inactive on legacy manifests)
     assert(m.droppedColumns.isEmpty && m.dropped.isEmpty)
+  }
+
+  // ------------------------------------------- commit carry-forward table
+
+  /** Table cell: the head's value survives the commit. */
+  private case object Carried
+  /** Table cell: the commit leaves the field unset. */
+  private case object Reset
+
+  test("every commit kind carries, resets or overrides each manifest field per the table") {
+    val spark = TestSpark.spark
+    val base = Files.createTempDirectory(java.nio.file.Paths.get("target"), "carry-")
+      .toAbsolutePath.toString
+    val fs = LanceFormat.fileSystem(new Path(base), new org.apache.hadoop.conf.Configuration())
+    implicit val fmts: org.json4s.Formats =
+      org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints)
+    def put(p: Path, text: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    val schema = new StructType().add("id", LongType).add("v", StringType)
+      .add("n", IntegerType)
+    val frags = Seq(FragmentMeta(0, "f0.parquet", 5), FragmentMeta(1, "f1.parquet", 5))
+    // one real parquet file (column `id`) for cherry-pick's footer read
+    val parquetOut = s"$base/parquet"
+    spark.range(3).coalesce(1).write.parquet(parquetOut)
+    val parquetFile = fs.listStatus(new Path(parquetOut)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+
+    /** A fresh table whose v1 head sets EVERY optional manifest field,
+      * written as JSON so the head needs no particular commit path. Its
+      * fragment list lives in a group file, so `fragmentGroups` is set. */
+    def forgedHead(name: String): (Path, Manifest) = {
+      val root = new Path(s"$base/$name")
+      frags.foreach(f => fs.create(new Path(root, s"data/${f.file}")).close())
+      val group = s"g-${java.util.UUID.randomUUID()}.json"
+      put(new Path(root, s"_groups/$group"), org.json4s.jackson.Serialization.write(frags))
+      val head = Manifest(1L, schema.json, Seq.empty,
+        epochId = Some(11L),
+        committedAtMs = 1L,
+        operation = Some("append"),
+        droppedColumns = Some(Seq("gone")),
+        constraints = Some(Map("pos" -> "id >= 0")),
+        streamEpochs = Some(Map("q" -> 3L)),
+        columnMapping = Some(Map("v" -> "v_phys")),
+        clusterBy = Some(Seq("id")),
+        bucketBy = Some(BucketSpecMeta(4, Seq("id"), scheme = Some("grid"))),
+        bloomFilters = Some(Seq("v")),
+        changeFiles = Some(Seq(ChangeFileMeta("cf.parquet", 1L, "insert"))),
+        properties = Some(Map("k" -> "1")),
+        fragmentGroups = Some(Seq(group)))
+      put(new Path(root, s"${LanceFormat.VersionsDir}/1.manifest.json"),
+        org.json4s.jackson.Serialization.write(head))
+      (root, LanceFormat.readManifest(fs, root, 1L))
+    }
+    def latest(root: Path): Manifest = LanceFormat.readLatest(fs, root).get
+    def branchAppend(root: Path, h: Manifest, file: String): Unit = {
+      LanceFormat.createBranch(fs, root, "b")
+      LanceFormat.commitAppendIn(fs, LanceFormat.branchPath(root, "b"), h.schema,
+        Seq(FragmentMeta(0, file, 3)), epochId = Some(41L),
+        streamEpoch = Some(("b", 1L)))
+    }
+
+    val fields = Seq[(String, Manifest => Any)](
+      "operation" -> (_.operation), "epochId" -> (_.epochId),
+      "droppedColumns" -> (_.droppedColumns), "constraints" -> (_.constraints),
+      "streamEpochs" -> (_.streamEpochs), "columnMapping" -> (_.columnMapping),
+      "clusterBy" -> (_.clusterBy), "bucketBy" -> (_.bucketBy),
+      "bloomFilters" -> (_.bloomFilters), "changeFiles" -> (_.changeFiles),
+      "properties" -> (_.properties), "fragmentGroups" -> (_.fragmentGroups))
+    val C = Carried
+    val R = Reset
+    val cf2 = ChangeFileMeta("cf2.parquet", 1L, "delete")
+    // One row per commit kind: how to commit over the forged head, and per
+    // field (in `fields` order) Carried, Reset or the overriding value.
+    // Kinds returning a Manifest are checked on it; the rest on the
+    // manifest read back, where `fragmentGroups` is the packer's: unset
+    // below the inline threshold.
+    val table: Seq[(String, (Path, Manifest) => Manifest, Seq[Any])] = Seq(
+      ("append", (root, h) => LanceFormat.commitAppend(fs, root, h.schema,
+        Seq(FragmentMeta(0, "a.parquet", 1)), epochId = Some(21L)),
+        Seq(Some("append"), Some(21L), C, C, C, C, C, C, C, R, C, C)),
+      ("overwrite", (root, h) => LanceFormat.commitOverwrite(fs, root, h.schema,
+        Seq(FragmentMeta(0, "o.parquet", 1)), epochId = Some(22L)),
+        Seq(Some("overwrite"), Some(22L), R, C, C, C, C, C, C, R, C, R)),
+      ("replace", (root, h) => LanceFormat.commitReplace(fs, root, h.schema, Set(0),
+        Seq(FragmentMeta(0, "r.parquet", 4)), changeFiles = Seq(cf2))._1,
+        Seq(Some("replace"), C, C, C, C, C, C, C, C, Some(Seq(cf2)), C, C)),
+      ("alter", (root, h) => LanceFormat.commitAlter(fs, root,
+        h.schema.add("extra", StringType), Seq("gone", "gone2")),
+        Seq(Some("alter"), C, Some(Seq("gone", "gone2")), C, C, C, C, C, C, R, C, C)),
+      ("rename", (root, _) => LanceFormat.commitRename(fs, root, "v", "w"),
+        Seq(Some("alter"), C, C, C, C, Some(Map("w" -> "v_phys")), C, C,
+          Some(Seq("w")), R, C, C)),
+      ("widen", (root, _) => LanceFormat.commitWiden(fs, root, "n", LongType),
+        Seq(Some("alter"), C, C, C, C, C, C, C, C, R, C, C)),
+      ("clusterBy", (root, _) => LanceFormat.commitClusterBy(fs, root, Seq.empty),
+        Seq(Some("alter"), C, C, C, C, C, R, C, C, R, C, C)),
+      ("bucketBy", (root, _) => LanceFormat.commitBucketBy(fs, root, 0, Seq.empty),
+        Seq(Some("alter"), C, C, C, C, C, C, R, C, R, C, C)),
+      ("bloomFilters", (root, _) => LanceFormat.commitBloomFilters(fs, root, Seq("id")),
+        Seq(Some("alter"), C, C, C, C, C, C, C, Some(Seq("id")), R, C, C)),
+      ("properties", (root, _) => LanceFormat.commitProperties(fs, root, Map("k2" -> "2")),
+        Seq(Some("alter"), C, C, C, C, C, C, C, C, R,
+          Some(Map("k" -> "1", "k2" -> "2")), C)),
+      ("constraints", (root, _) =>
+        LanceFormat.commitConstraints(fs, root, _ + ("small" -> "n < 100")),
+        Seq(Some("alter"), C, C, Some(Map("pos" -> "id >= 0", "small" -> "n < 100")),
+          C, C, C, C, C, R, C, C)),
+      // the target is the head; an append moves past it first, and its
+      // epoch and replay guard are what restore must keep
+      ("restore", (root, h) => {
+        LanceFormat.commitAppend(fs, root, h.schema, Seq(FragmentMeta(0, "a.parquet", 1)),
+          epochId = Some(31L), streamEpoch = Some(("q", 9L)))
+        Lance.restore(spark, root.toString, 1L)
+        latest(root)
+      }, Seq(Some("restore"), Some(31L), C, C, Some(Map("q" -> 9L)), C, C, C, C, R, C, R)),
+      // the branch head's epoch, but main's replay guards
+      ("fastForward", (root, h) => {
+        branchAppend(root, h, "b.parquet")
+        LanceFormat.fastForward(fs, root, "b")
+        latest(root)
+      }, Seq(Some("fast-forward"), Some(41L), C, C, C, C, C, C, C, R, C, R)),
+      ("rebase", (root, h) => {
+        branchAppend(root, h, "b.parquet")
+        LanceFormat.rebaseBranch(fs, root, "b")
+        latest(root)
+      }, Seq(Some("rebase"), C, C, C, C, C, C, C, C, R, C, R)),
+      ("cherryPick", (root, h) => {
+        fs.copyFromLocalFile(false, true, parquetFile, new Path(root, "data/picked.parquet"))
+        branchAppend(root, h, "picked.parquet")
+        LanceFormat.cherryPick(fs, root, "b", 2L)
+        latest(root)
+      }, Seq(Some("cherry-pick"), C, C, C, C, C, C, C, C, R, C, R)),
+      ("clone", (root, _) => {
+        val dst = new Path(s"$root-clone")
+        Lance.cloneTable(spark, root.toString, dst.toString)
+        latest(dst)
+      }, Seq(Some("clone"), R, C, C, R, C, C, C, C, R, C, R)))
+    try {
+      for ((kind, commit, row) <- table) {
+        assert(row.size == fields.size, s"$kind row has ${row.size} cells")
+        val (root, head) = forgedHead(kind)
+        fields.foreach { case (_, get) => assert(get(head) != None) }
+        val m = commit(root, head)
+        fields.zip(row).foreach { case ((field, get), cell) =>
+          val want = cell match {
+            case Carried => get(head)
+            case Reset => None
+            case v => v
+          }
+          assert(get(m) == want, s"$kind: $field")
+        }
+      }
+    } finally fs.delete(new Path(base), true)
   }
 }

@@ -466,9 +466,10 @@ class SpjSpec extends AnyFunSuite {
     assert(m0.bucketBy.get.scheme.contains("grid"))
     // simulate a pre-grid table: same spec, no scheme marker (its tags
     // would have been tuple hashes; decoding them as digits mis-prunes)
-    graft.format.LanceFormat.commit(fs(dir), new Path(dir),
-      m0.copy(version = m0.version + 1,
-        bucketBy = m0.bucketBy.map(_.copy(scheme = None))), None)
+    graft.format.LanceFormat.transact(fs(dir),
+        graft.format.LanceFormat.versionsPath(new Path(dir)), m0.operation) { prev =>
+      prev.get.copy(bucketBy = prev.get.bucketBy.map(_.copy(scheme = None)))
+    }
     val m1 = manifest(dir)
     assert(!m1.bucketBy.get.compositeTagsReadable)
     import org.apache.spark.sql.sources._
