@@ -5,9 +5,11 @@ package graft.format
   * serial loop over them serializes the driver on file count, which at
   * 100 TB bucket/partition counts (thousands of part files) becomes the
   * bottleneck of an otherwise metadata-only step. Runs `f` over `xs` on
-  * at most `threads` threads, preserving input order and rethrowing the
-  * first failure's own exception (not the ExecutionException wrapper).
-  * Sequential below 4 items — pool setup outweighs the win there. */
+  * at most `threads` threads, preserving input order. Fails fast: the
+  * first item to fail cancels the rest (running ones are interrupted,
+  * queued ones never start) and its own exception is rethrown (not the
+  * ExecutionException wrapper). Sequential below 4 items — pool setup
+  * outweighs the win there. */
 private[graft] object DriverPar {
   def parMap[A, B](xs: Seq[A], threads: Int = 8, minPar: Int = 4)(
       f: A => B): Seq[B] =
@@ -16,18 +18,24 @@ private[graft] object DriverPar {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(threads, xs.size))
       try {
-        val futures = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[B] {
-            def call(): B = f(x)
+        // results arrive in completion order, so the first failure is
+        // seen as soon as it happens, not after the items queued before it
+        val done = new java.util.concurrent.ExecutorCompletionService[(Int, B)](pool)
+        xs.zipWithIndex.foreach { case (x, i) =>
+          done.submit(new java.util.concurrent.Callable[(Int, B)] {
+            def call(): (Int, B) = (i, f(x))
           })
         }
-        futures.map { fu =>
-          try fu.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
+        val out = new Array[Any](xs.size)
+        xs.indices.foreach { _ =>
+          val (i, b) =
+            try done.take().get()
+            catch {
+              case e: java.util.concurrent.ExecutionException => throw e.getCause
+            }
+          out(i) = b
         }
-      } finally pool.shutdown()
+        out.toSeq.asInstanceOf[Seq[B]]
+      } finally pool.shutdownNow()
     }
 }

@@ -34,6 +34,23 @@ object HnswIndex {
   def graphPath(datasetPath: String, column: String): String =
     s"${IvfIndex.indexPath(datasetPath, column)}/hnsw_graph"
 
+  /** Rows of the graph sidecar: one node of a bucket's graph with its
+    * neighbor ids per level. The writer emits it and every reader names
+    * it ([[IvfIndex.readSidecar]]); `__ivf_part` last, the partition
+    * column. */
+  private[index] val GraphSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("level", IntegerType, nullable = false),
+    StructField("neighbors", ArrayType(ArrayType(LongType)), nullable = false),
+    StructField("__ivf_part", IntegerType, nullable = false)))
+
+  /** The graphs of the probed buckets `ids` (the graph twin of
+    * [[IvfIndex.probedBuckets]]). */
+  private def probedGraphs(spark: SparkSession, datasetPath: String,
+      column: String, meta: IvfIndex.IndexMeta, ids: Seq[Int]): DataFrame =
+    IvfIndex.readSidecar(spark, graphPath(datasetPath, column), GraphSchema,
+      Some(IvfIndex.presentParts(spark, datasetPath, column, meta, ids)))
+
   // ---- deterministic level assignment ----
 
   private def mix64(z0: Long): Long = {
@@ -211,19 +228,15 @@ object HnswIndex {
     // the graph is built under the index's scoring metric — a graph
     // optimized for L2 walks badly under cosine/dot and vice versa
     val dist = metricDist(meta.metric)
-    val src = spark.read.parquet(s"${IvfIndex.indexPath(datasetPath, column)}/buckets")
-    val filtered = bucketIds.fold(src)(ids => src.filter(col("__ivf_part").isin(ids: _*)))
-    val buckets = filtered
+    // refresh passes the buckets that just received rows: each has a
+    // directory, though the meta it loaded predates them
+    val buckets = IvfIndex
+      .readSidecar(spark, IvfIndex.bucketsPath(datasetPath, column), meta.bucketStruct, bucketIds)
       .select(col(meta.idColumn).cast("long").as(meta.idColumn),
         col(meta.column).cast("array<float>").as("__v"),
         col("__ivf_part"))
       .repartition(math.max(bucketIds.map(_.size).getOrElse(meta.numPartitions), 1),
         col("__ivf_part"))
-    val outSchema = StructType(Seq(
-      StructField("__ivf_part", IntegerType, nullable = false),
-      StructField("id", LongType, nullable = false),
-      StructField("level", IntegerType, nullable = false),
-      StructField("neighbors", ArrayType(ArrayType(LongType)), nullable = false)))
     val graph = buckets.mapPartitions { rows =>
       // a task may hold several hash-colliding buckets: group, then build
       val byBucket = mutable.Map.empty[Int, (mutable.ArrayBuffer[Long], mutable.ArrayBuffer[Array[Float]])]
@@ -239,10 +252,10 @@ object HnswIndex {
         val ids = order.map(idsB).toArray
         val vecs = order.map(vecsB).toArray
         buildBucketGraph(ids, vecs, params, dist).map { case (id, level, nbrs) =>
-          Row(b, id, level, nbrs)
+          Row(id, level, nbrs, b)
         }
       }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+    }(org.apache.spark.sql.Encoders.row(GraphSchema))
     val writer = graph.write.mode("overwrite").partitionBy("__ivf_part")
     bucketIds.fold(writer)(_ => writer.option("partitionOverwriteMode", "dynamic"))
       .parquet(graphPath(datasetPath, column))
@@ -346,7 +359,8 @@ object HnswIndex {
         var used = probes0
         var curEf = ef
         var probedRows = -1L // lazily counted, re-counted when `used` grows
-        var rows = topK(used, curEf).take(k)
+        val first = topK(used, curEf) // its schema is every widening's
+        var rows = first.take(k)
         while (rows.length < k && {
           if (probedRows < 0) probedRows = bucketsFor(used).count()
           curEf < probedRows * 2 || used < numPartitions
@@ -367,8 +381,7 @@ object HnswIndex {
         if (rows.length < k)
           log.warn(s"filtered graph search $what: the entire index holds only " +
             s"${rows.length} reachable rows matching the filter (k=$k)")
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-          topK(probes0, ef).schema)
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), first.schema)
     }
   }
 
@@ -413,9 +426,8 @@ object HnswIndex {
     val probes0 = math.min(nprobes, meta.numPartitions)
     warnOversized(spark, meta, rankedAll.take(probes0))
 
-    val ip = IvfIndex.indexPath(datasetPath, column)
-    def bucketsFor(n: Int): DataFrame = spark.read.parquet(s"$ip/buckets")
-      .filter(col("__ivf_part").isin(rankedAll.take(n): _*))
+    def bucketsFor(n: Int): DataFrame =
+      IvfIndex.probedBuckets(spark, datasetPath, column, meta, rankedAll.take(n))
     val keepCol = filter.map(f => coalesce(f.cast("boolean"), lit(false)))
       .getOrElse(lit(true))
     val bcQ = spark.sparkContext.broadcast(query)
@@ -430,8 +442,7 @@ object HnswIndex {
       val vecs = bucketsFor(n)
         .select(col("__ivf_part"), col(meta.idColumn).cast("long").as("id"),
           col(meta.column).cast("array<float>").as("__v"), keepCol.as("__keep"))
-      val graph = spark.read.parquet(graphPath(datasetPath, column))
-        .filter(col("__ivf_part").isin(rankedAll.take(n): _*))
+      val graph = probedGraphs(spark, datasetPath, column, meta, rankedAll.take(n))
         .select(col("__ivf_part"), col("id"), col("level"), col("neighbors"))
       val joined = vecs.join(graph, Seq("__ivf_part", "id"))
         .repartition(math.max(n, 1), col("__ivf_part"))
@@ -495,7 +506,8 @@ object HnswIndex {
     // at its ORIGINAL type (search casts to float32 for the walk; this
     // path deliberately doesn't), and it exists even for index-only
     // destinations built straight from a DataFrame
-    spark.read.parquet(s"${IvfIndex.indexPath(datasetPath, column)}/buckets")
+    IvfIndex.readSidecar(spark, IvfIndex.bucketsPath(datasetPath, column),
+      meta.bucketStruct, None)
       .filter(col(idCol).isin(ids: _*))
       .withColumn("_distance", dist)
       .select(col(idCol).cast("long").as(idCol), col("_distance"))
@@ -536,9 +548,8 @@ object HnswIndex {
     val adc = IvfIndex.adcTable(meta, pm, qd)
     val kCodes = 1 << pm.numBits
 
-    val ip = IvfIndex.indexPath(datasetPath, column)
-    def bucketsFor(n: Int): DataFrame = spark.read.parquet(s"$ip/buckets")
-      .filter(col("__ivf_part").isin(rankedAll.take(n): _*))
+    def bucketsFor(n: Int): DataFrame =
+      IvfIndex.probedBuckets(spark, datasetPath, column, meta, rankedAll.take(n))
     val keepCol = filter.map(f => coalesce(f.cast("boolean"), lit(false)))
       .getOrElse(lit(true))
     val bcQ = spark.sparkContext.broadcast(query)
@@ -553,8 +564,7 @@ object HnswIndex {
         .select(col("__ivf_part"), col(meta.idColumn).cast("long").as("id"),
           col(meta.column).cast("array<float>").as("__v"), keepCol.as("__keep"),
           col("__pq_code"))
-      val graph = spark.read.parquet(graphPath(datasetPath, column))
-        .filter(col("__ivf_part").isin(rankedAll.take(n): _*))
+      val graph = probedGraphs(spark, datasetPath, column, meta, rankedAll.take(n))
         .select(col("__ivf_part"), col("id"), col("level"), col("neighbors"))
       val joined = vecs.join(graph, Seq("__ivf_part", "id"))
         .repartition(math.max(n, 1), col("__ivf_part"))

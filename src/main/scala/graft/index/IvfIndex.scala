@@ -5,8 +5,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.json4s.NoTypeHints
 import org.json4s.jackson.Serialization
 
@@ -22,11 +23,13 @@ import java.nio.charset.StandardCharsets
   * directory-partitioned Parquet sidecar under `<dataset>_indices/`.
   *
   * Search: the query is assigned to its `nprobes` nearest centroids on the
-  * driver (centroids are tiny); the scan then carries a partition filter
-  * `__ivf_part IN (...)` that prunes whole bucket directories —
-  * `PartitionFilters` in the plan, so a 100 TB index probes only
-  * `nprobes/numPartitions` of the data. Within probed buckets the distance
-  * is exact (IVF_FLAT); top-k via TakeOrderedAndProject.
+  * driver (centroids are tiny); the scan lists only those `__ivf_part=N`
+  * bucket directories, under the bucket schema stamped in `index.json`
+  * (no schema-inference job per query), and carries the partition filter
+  * `__ivf_part IN (...)` — `PartitionFilters` in the plan, so a 100 TB
+  * index probes only `nprobes/numPartitions` of the data. Within probed
+  * buckets the distance is exact (IVF_FLAT); top-k via
+  * TakeOrderedAndProject.
   *
   * With `nprobes = numPartitions` results equal exact brute-force KNN.
   */
@@ -46,15 +49,29 @@ object IvfIndex {
   /** `bucketRows` (string-keyed for JSON stability: bucket id → row count)
     * feeds the oversized-bucket guard in [[HnswIndex]] — graph search
     * materializes one bucket per task, and the guard warns before a
-    * lopsided bucket blows a task's memory. Absent on indexes built
-    * before the field existed (no guard, same behavior as before).
+    * lopsided bucket blows a task's memory. Its keys are also the buckets
+    * that have a directory: a probe skips the others instead of listing a
+    * missing path. Absent on indexes built before the field existed (no
+    * guard; a probe lists the sidecar root once to find the directories).
+    *
+    * `bucketSchema` is the Spark schema (JSON) of the bucket sidecar as
+    * build wrote it, `__ivf_part` last as the partition column; every
+    * sidecar read names it instead of inferring it. Refresh carries it
+    * over unchanged. An `index.json` written before the field existed is
+    * inferred once by [[loadMeta]] and kept in the cached meta.
     */
   case class IndexMeta(column: String, idColumn: String, metric: String,
     numPartitions: Int, dim: Int, centroids: Seq[Seq[Double]],
     pq: Option[PqMeta] = None,
     datasetVersion: Option[Long] = None,
     formatVersion: Option[Int] = None,
-    bucketRows: Option[Map[String, Long]] = None)
+    bucketRows: Option[Map[String, Long]] = None,
+    bucketSchema: Option[String] = None) {
+    /** [[bucketSchema]] parsed; every meta [[loadMeta]] returns has it. */
+    private[graft] def bucketStruct: StructType =
+      DataType.fromJson(bucketSchema.getOrElse(throw new IllegalStateException(
+        s"index over $column carries no bucket schema"))).asInstanceOf[StructType]
+  }
 
   /** Product-quantization codebooks: codebooks(j)(c) is the `c`-th centroid
     * of subspace `j` (dim/numSubVectors floats each). Reference defaults:
@@ -78,6 +95,85 @@ object IvfIndex {
 
   def indexPath(datasetPath: String, column: String): String =
     s"$datasetPath/_indices/${column}_ivf"
+
+  private[index] def bucketsPath(datasetPath: String, column: String): String =
+    s"${indexPath(datasetPath, column)}/buckets"
+
+  /** The one reader of the index's directory-partitioned parquet sidecars
+    * (the IVF buckets and the HNSW graph). The schema is named, never
+    * inferred, so a read runs no schema-inference job. `parts = None`
+    * reads the whole sidecar; `Some(ids)` lists only those `__ivf_part=N`
+    * directories — each must exist ([[presentParts]]) — and keeps the
+    * `__ivf_part IN (...)` filter, so plans still show it among the
+    * `PartitionFilters`. `schema` must hold `__ivf_part` last, where a
+    * partitioned read puts it.
+    */
+  private[index] def readSidecar(spark: SparkSession, dir: String, schema: StructType,
+      parts: Option[Seq[Int]]): DataFrame = parts match {
+    case None => spark.read.schema(schema).parquet(dir)
+    case Some(ids) if ids.isEmpty =>
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    case Some(ids) =>
+      spark.read.schema(schema).option("basePath", dir)
+        .parquet(ids.map(p => s"$dir/__ivf_part=$p"): _*)
+        .filter(col("__ivf_part").isin(ids: _*))
+  }
+
+  /** The rows of the probed buckets `ids` — the bucket read of every
+    * single-query probe (IVF and HNSW). */
+  private[index] def probedBuckets(spark: SparkSession, datasetPath: String,
+      column: String, meta: IndexMeta, ids: Seq[Int]): DataFrame =
+    readSidecar(spark, bucketsPath(datasetPath, column), meta.bucketStruct,
+      Some(presentParts(spark, datasetPath, column, meta, ids)))
+
+  /** The buckets among `ids` that have a directory, in `ids`' order: no
+    * row was assigned to a bucket without one. Decided from
+    * [[IndexMeta.bucketRows]]; an index without that field costs one
+    * listing of the sidecar root.
+    */
+  private[index] def presentParts(spark: SparkSession, datasetPath: String,
+      column: String, meta: IndexMeta, ids: Seq[Int]): Seq[Int] = {
+    val present = meta.bucketRows.map(_.keySet).getOrElse {
+      val bp = new Path(bucketsPath(datasetPath, column))
+      bucketDirs(bp.getFileSystem(spark.sessionState.newHadoopConf()), bp).keySet
+    }
+    ids.filter(i => present(i.toString))
+  }
+
+  /** Bucket id → its `__ivf_part=` directory under the sidecar root `bp`:
+    * one listing. */
+  private def bucketDirs(fs: org.apache.hadoop.fs.FileSystem, bp: Path): Map[String, Path] =
+    fs.listStatus(bp).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__ivf_part="))
+      .map(d => d.getPath.getName.stripPrefix("__ivf_part=") -> d.getPath).toMap
+
+  /** Bucket id → its `part-` files: one listing of the sidecar root plus
+    * one per bucket directory. Build and refresh both count rows from this
+    * listing ([[footerRowCounts]]).
+    */
+  private def bucketFiles(fs: org.apache.hadoop.fs.FileSystem,
+      bp: Path): Map[String, Seq[Path]] =
+    bucketDirs(fs, bp).map { case (part, d) =>
+      part -> fs.listStatus(d).toSeq
+        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+        .map(_.getPath)
+    }
+
+  /** Per-bucket row counts of `files` ((bucket, file) pairs) from their
+    * parquet footers. The footers are read in bounded parallel (guide §5):
+    * a serial per-file loop serialized the driver on part-file count.
+    */
+  private def footerRowCounts(conf: org.apache.hadoop.conf.Configuration,
+      files: Seq[(String, Path)]): Map[String, Long] = {
+    val rows = graft.format.DriverPar.parMap(files) { case (_, p) =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    }
+    files.map(_._1).zip(rows).groupBy(_._1).map { case (part, xs) =>
+      part -> xs.map(_._2).sum
+    }
+  }
 
   private def sq(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
@@ -239,35 +335,21 @@ object IvfIndex {
       val assigned = df.withColumn("__ivf_part", assign(col(column).cast("array<float>")))
       val withCodes = encode.fold(assigned)(e =>
         assigned.withColumn("__pq_code", e(col(column).cast("array<float>"))))
-      withCodes.write.mode("overwrite").partitionBy("__ivf_part").parquet(s"$ip/buckets")
+      withCodes.write.mode("overwrite").partitionBy("__ivf_part")
+        .parquet(bucketsPath(datasetPath, column))
+      // the schema a read of the sidecar yields: the partition column
+      // moves last and comes back nullable
+      val bucketSchema = StructType(withCodes.schema.filterNot(_.name == "__ivf_part") :+
+        StructField("__ivf_part", IntegerType, nullable = true))
 
       // per-bucket row counts for the oversized-bucket guard, from the
       // written files' parquet FOOTERS (driver-side metadata reads) —
       // the former partition-column scan was one more Spark job per build
       val counts = {
         val conf = spark.sessionState.newHadoopConf()
-        val bp = new org.apache.hadoop.fs.Path(s"$ip/buckets")
-        val fs = bp.getFileSystem(conf)
-        // (bucket, file) pairs flattened, footers read in bounded
-        // parallel (guide §5): the serial per-file loop serialized the
-        // driver on total part-file count
-        val files = fs.listStatus(bp).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("__ivf_part="))
-          .flatMap { d =>
-            val part = d.getPath.getName.stripPrefix("__ivf_part=")
-            fs.listStatus(d.getPath).toSeq
-              .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-              .map(f => part -> f.getPath)
-          }
-        val rows = graft.format.DriverPar.parMap(files) { case (_, p) =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(p, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }
-        files.map(_._1).zip(rows).groupBy(_._1).map { case (part, xs) =>
-          part -> xs.map(_._2).sum
-        }
+        val bp = new Path(bucketsPath(datasetPath, column))
+        footerRowCounts(conf, bucketFiles(bp.getFileSystem(conf), bp).toSeq
+          .flatMap { case (part, files) => files.map(part -> _) })
       }
 
       val meta = IndexMeta(column, idColumn, metric, numPartitions,
@@ -275,7 +357,8 @@ object IvfIndex {
         centroids.map(_.toSeq).toSeq, pqMeta,
         datasetVersionOf(spark, datasetPath),
         formatVersion = Some(CurrentFormatVersion),
-        bucketRows = Some(counts))
+        bucketRows = Some(counts),
+        bucketSchema = Some(bucketSchema.json))
       writeMeta(spark, ip, meta)
       IndexBuildResult(success = true, System.currentTimeMillis() - t0, numPartitions)
     } catch {
@@ -354,34 +437,15 @@ object IvfIndex {
       // — the former groupBy-count job scanned the whole delta a second
       // time before the append
       val conf = spark.sessionState.newHadoopConf()
-      val bp = new Path(s"$ip/buckets")
+      val bp = new Path(bucketsPath(datasetPath, column))
       val bfs = bp.getFileSystem(conf)
-      def bucketFiles(): Map[String, Set[String]] =
-        if (!bfs.exists(bp)) Map.empty
-        else bfs.listStatus(bp).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("__ivf_part="))
-          .map { d =>
-            d.getPath.getName.stripPrefix("__ivf_part=") ->
-              bfs.listStatus(d.getPath).toSeq
-                .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-                .map(_.getPath.getName).toSet
-          }.toMap
-      val before = bucketFiles()
-      withCodes.write.mode("append").partitionBy("__ivf_part").parquet(s"$ip/buckets")
-      // fresh files flattened across buckets, footers read in bounded
-      // parallel (guide §5) — the serial loop scaled with delta file count
-      val freshFiles = bucketFiles().toSeq.flatMap { case (part, files) =>
-        (files -- before.getOrElse(part, Set.empty)).toSeq
-          .map(name => part -> new Path(new Path(bp, s"__ivf_part=$part"), name))
-      }
-      val freshRows = graft.format.DriverPar.parMap(freshFiles) { case (_, p) =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(p, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
-      deltaCounts = freshFiles.map(_._1).zip(freshRows).groupBy(_._1)
-        .map { case (part, xs) => part -> xs.map(_._2).sum }
+      def listed(): Map[String, Seq[Path]] =
+        if (!bfs.exists(bp)) Map.empty else bucketFiles(bfs, bp)
+      val before = listed().values.flatten.toSet
+      withCodes.write.mode("append").partitionBy("__ivf_part").parquet(bp.toString)
+      deltaCounts = footerRowCounts(conf, listed().toSeq.flatMap { case (part, files) =>
+        files.filterNot(before).map(part -> _)
+      })
     }
     // per-bucket graphs are independent (no cross-bucket edges), so the
     // graph sidecar refreshes incrementally: rebuild ONLY the buckets
@@ -511,16 +575,21 @@ object IvfIndex {
       val buf = new Array[Byte](8192)
       var n = in.read(buf)
       while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      val meta = Serialization.read[IndexMeta](bytes.toString("UTF-8"))
+      val stored = Serialization.read[IndexMeta](bytes.toString("UTF-8"))
       // Assignment-version gate: cosine buckets assigned before v2 used raw
       // (unnormalized) KMeans, which the current normalized probe ranking
       // disagrees with — probing such a sidecar loses recall with no other
       // symptom, so fail loud instead (L2/dot assignment never changed).
-      if (meta.metric.equalsIgnoreCase("cosine") && !meta.formatVersion.exists(_ >= 2))
+      if (stored.metric.equalsIgnoreCase("cosine") && !stored.formatVersion.exists(_ >= 2))
         throw new IllegalStateException(
           s"cosine index at $metaPath predates normalized bucket assignment " +
-            s"(formatVersion ${meta.formatVersion.getOrElse(1)} < 2); its stored " +
+            s"(formatVersion ${stored.formatVersion.getOrElse(1)} < 2); its stored " +
             "buckets disagree with the current probe ranking - rebuild the index")
+      // an index.json written before the bucket schema was stamped: infer
+      // it here, once per cached entry — the only schema inference left
+      val meta = if (stored.bucketSchema.isDefined) stored
+        else stored.copy(bucketSchema = Some(
+          spark.read.parquet(bucketsPath(datasetPath, column)).schema.json))
       if (metaCache.size > 64) metaCache.clear() // bounded; rebuilt on demand
       metaCache.put(key, meta)
       meta
@@ -556,8 +625,6 @@ object IvfIndex {
     val ranked = meta.centroids.zipWithIndex
       .map { case (c, i) => (centroidDist(q, c.toArray, metric), i) }
       .sortBy(_._1).map(_._2)
-    val buckets = spark.read.parquet(s"${indexPath(datasetPath, column)}/buckets")
-
     val dist = metric.toLowerCase match {
       case "l2" => l2_distance(col(column), lit(q))
       case "cosine" => cosine_distance(col(column), lit(q))
@@ -566,7 +633,7 @@ object IvfIndex {
     }
 
     def annQuery(n: Int): DataFrame = {
-      val p = buckets.filter(col("__ivf_part").isin(ranked.take(n): _*))
+      val p = probedBuckets(spark, datasetPath, column, meta, ranked.take(n))
       filter.fold(p)(p.filter)
         .withColumn("_distance", dist)
         .drop("__ivf_part", "__pq_code") // internal columns never leak
@@ -589,7 +656,8 @@ object IvfIndex {
         // search-within-index semantics (`LanceVectorSearch.java:170-174`)
         // but fails loud instead of short.
         var used = probes
-        var rows = annQuery(used).take(k)
+        val first = annQuery(used) // its schema is every widening's
+        var rows = first.take(k)
         while (rows.length < k && used < meta.numPartitions) {
           val widened = math.min(used * 2, meta.numPartitions)
           log.warn(s"filtered ANN over $datasetPath/$column: only ${rows.length} of " +
@@ -601,7 +669,7 @@ object IvfIndex {
           log.warn(s"filtered ANN over $datasetPath/$column: the entire index " +
             s"holds only ${rows.length} rows matching the filter (k=$k)")
         spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), annQuery(used).schema)
+          java.util.Arrays.asList(rows: _*), first.schema)
     }
   }
 
@@ -713,7 +781,7 @@ object IvfIndex {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__q_id"))
       .orderBy(col("_distance"), col(meta.idColumn))
-    spark.read.parquet(s"${indexPath(datasetPath, column)}/buckets")
+    readSidecar(spark, bucketsPath(datasetPath, column), meta.bucketStruct, None)
       .join(pairs, "__ivf_part")
       .withColumn("_distance", dist)
       .withColumn("_rank", row_number().over(w))
@@ -779,7 +847,8 @@ object IvfIndex {
         .map { case (c, i) => (centroidDist(q, c.toArray, "dot"), i) }
         .sortBy(_._1).take(probes).map(_._2)
     }.distinct
-    val buckets = spark.read.parquet(s"${indexPath(datasetPath, column)}/buckets")
+    val buckets = readSidecar(spark, bucketsPath(datasetPath, column),
+      meta.bucketStruct, None)
     val base = filter.fold(buckets)(buckets.filter)
 
     // broadcast query-vector table: (q_id, q_vec) — a late-interaction
@@ -913,10 +982,8 @@ object IvfIndex {
     val table = adcTable(meta, pm, q)
     val kCodes = 1 << pm.numBits
     val tableSql = table.mkString("array(", "D, ", "D)")
-    val buckets = spark.read.parquet(s"${indexPath(datasetPath, column)}/buckets")
-
     def annQuery(n: Int): DataFrame = {
-      val p = buckets.filter(col("__ivf_part").isin(ranked.take(n): _*))
+      val p = probedBuckets(spark, datasetPath, column, meta, ranked.take(n))
       filter.fold(p)(p.filter) // pre-filter BEFORE the ADC top-(k·refine)
         .withColumn("__adc", expr(
           s"""aggregate(sequence(0, ${pm.numSubVectors - 1}), CAST(0 AS DOUBLE),
@@ -936,7 +1003,8 @@ object IvfIndex {
         // same V3 shortfall contract as [[search]]: widen probes loudly
         // instead of returning a silent short set
         var used = probes
-        var rows = annQuery(used).take(k)
+        val first = annQuery(used) // its schema is every widening's
+        var rows = first.take(k)
         while (rows.length < k && used < meta.numPartitions) {
           val widened = math.min(used * 2, meta.numPartitions)
           log.warn(s"filtered PQ search over $datasetPath/$column: only " +
@@ -949,7 +1017,7 @@ object IvfIndex {
           log.warn(s"filtered PQ search over $datasetPath/$column: the entire " +
             s"index holds only ${rows.length} rows matching the filter (k=$k)")
         spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), annQuery(used).schema)
+          java.util.Arrays.asList(rows: _*), first.schema)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.IvfIndex
+import graft.index.{HnswIndex, IvfIndex}
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,6 +27,44 @@ class IvfIndexSpec extends AnyFunSuite {
   private def queryVec(qid: Long): Array[Float] =
     Tables.t(spark, sf, "embeddings").filter($"vec_id" === qid)
       .select($"embedding").collect().head.getSeq[Float](0).toArray
+
+  /** Spark jobs `body` starts, counted by a listener on this thread's job
+    * group. The listener bus delivers in order, so once a marker job run
+    * after `body` is seen, every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet()
+          case g if g == s"$group-marker" => marked.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marked.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Overwrite `index.json` out of band, as an index written by other code
+    * would look (the meta cache misses on the new length). */
+  private def writeIndexJson(ds: String, meta: IvfIndex.IndexMeta): Unit = {
+    val metaFile = java.nio.file.Paths.get(s"${IvfIndex.indexPath(ds, "embedding")}/index.json")
+    val json = org.json4s.jackson.Serialization.write(meta)(
+      org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints))
+    java.nio.file.Files.write(metaFile, json.getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(
+      metaFile.getParent.resolve(s".${metaFile.getFileName}.crc"))
+  }
 
   test("index build succeeds and records metadata") {
     assert(built.success, built.error)
@@ -330,8 +368,78 @@ class IvfIndexSpec extends AnyFunSuite {
     // re-reads and sees the moved staleness stamp
     emb.filter($"vec_id" < 50).write.format("lance").mode("append").save(ds)
     assert(IvfIndex.refresh(spark, ds, "embedding") == 50L)
-    assert(IvfIndex.loadMeta(spark, ds, "embedding").datasetVersion.contains(2L))
+    val refreshed = IvfIndex.loadMeta(spark, ds, "embedding")
+    assert(refreshed.datasetVersion.contains(2L))
     assert(IvfIndex.metaReadCount(spark, ds, "embedding") == 2L)
+
+    // build stamped the bucket schema, refresh carried it over, and it is
+    // the schema inference would find
+    val buckets = s"${IvfIndex.indexPath(ds, "embedding")}/buckets"
+    assert(refreshed.bucketStruct == spark.read.parquet(buckets).schema)
+    // warm probes run no schema-inference job: IVF is its one top-k job,
+    // HNSW its three (two shuffle stages and the top-k)
+    assert(HnswIndex.build(spark, ds, "embedding").success)
+    def ivf() = IvfIndex.search(spark, ds, "embedding", q, 5, nprobes = 2)
+      .collect().map(_.getAs[Long]("vec_id")).toSeq
+    def hnsw() = HnswIndex.search(spark, ds, "embedding", q, 5, nprobes = 2)
+      .collect().map(_.getAs[Long]("vec_id")).toSeq
+    val (ivfRows, hnswRows) = (ivf(), hnsw())
+    assert(jobsOf(ivf()) == 1)
+    assert(jobsOf(hnsw()) == 3)
+
+    // an index.json without the stamp (written before it existed) is
+    // inferred once on load and serves the same rows
+    writeIndexJson(ds, refreshed.copy(bucketSchema = None))
+    assert(ivf() == ivfRows && hnsw() == hnswRows)
+    assert(IvfIndex.metaReadCount(spark, ds, "embedding") == 3L)
+    assert(IvfIndex.loadMeta(spark, ds, "embedding").bucketStruct == refreshed.bucketStruct)
+
+    // a rebuild that adds PQ codes is served the new schema at once:
+    // writeMeta evicted the entry that lacked __pq_code
+    val rebuilt = IvfIndex.build(spark, spark.read.format("lance").load(ds),
+      "embedding", "vec_id", ds, numPartitions = 4,
+      pq = Some(IvfIndex.PqParams(numSubVectors = 16, numBits = 4)))
+    assert(rebuilt.success, rebuilt.error)
+    assert(IvfIndex.loadMeta(spark, ds, "embedding").bucketStruct.fieldNames
+      .contains("__pq_code"))
+    assert(IvfIndex.searchPq(spark, ds, "embedding", q, 5, nprobes = 4).count() == 5)
+  }
+
+  test("a probed bucket without a directory reads as empty") {
+    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "ivfempty-")
+      .toAbsolutePath.toString
+    val ds = s"$dir/emb"
+    Tables.t(spark, sf, "embeddings").write.format("lance").mode("append").save(ds)
+    val r = IvfIndex.build(spark, spark.read.format("lance").load(ds),
+      "embedding", "vec_id", ds, numPartitions = 4)
+    assert(r.success, r.error)
+    assert(HnswIndex.build(spark, ds, "embedding").success)
+    val built = IvfIndex.loadMeta(spark, ds, "embedding")
+    // a fifth centroid AT the query: it ranks first, but no row was ever
+    // assigned to it, so it has no __ivf_part=4 directory
+    val q = queryVec(60L)
+    val qd = q.map(_.toDouble)
+    val phantom = built.copy(numPartitions = 5, centroids = built.centroids :+ qd.toSeq)
+    val real = built.centroids.indices
+      .minBy(i => IvfIndex.centroidDist(qd, built.centroids(i).toArray, "l2"))
+    val bucketRows = spark.read.parquet(s"${IvfIndex.indexPath(ds, "embedding")}/buckets")
+      .filter($"__ivf_part" === real)
+    val expected = Similarity.knnSearch(bucketRows, "embedding", q, 10, "l2")
+      .select($"vec_id").collect().map(_.getLong(0)).toSet
+    // existence comes from bucketRows; without it, from one listing
+    Seq(phantom, phantom.copy(bucketRows = None)).foreach { meta =>
+      writeIndexJson(ds, meta)
+      val got = IvfIndex.search(spark, ds, "embedding", q, 10, nprobes = 2)
+        .select($"vec_id").collect().map(_.getLong(0)).toSet
+      assert(got == expected, s"bucketRows=${meta.bucketRows.isDefined}")
+      // only the phantom is probed at first: filtered widening still
+      // reaches k from the buckets that exist
+      val filtered = IvfIndex.search(spark, ds, "embedding", q, 10, nprobes = 1,
+        filter = Some($"label" === 3)).select($"label").collect()
+      assert(filtered.length == 10 && filtered.forall(_.getInt(0) == 3))
+      assert(HnswIndex.search(spark, ds, "embedding", q, 10, nprobes = 2, ef = 200)
+        .collect().length == 10)
+    }
   }
 
   test("flipped-geometry knn join: distributed query side, identical results") {
